@@ -529,204 +529,13 @@ def run_score_scaling(n_cores: int) -> dict:
     }
 
 
-BLOCKSCALE_REPS = int(os.environ.get("CUTWED_BLOCKSCALE_REPS", "25"))
-CCSCALE_NODES = int(os.environ.get("CUTWED_CCSCALE_NODES", "4000000"))
-
-
-def run_block_scaling(n_cores: int) -> dict:
-    """Blocking-STAGE scaling probe (same methodology as
-    run_score_scaling): the in-pipeline blocking stage runs ~4-9 s at
-    32 cores, floor-dominated. This probe runs the SAME
-    build_candidate_pairs_from_state operator over the 100k corpus's
-    state table replicated BLOCKSCALE_REPS times — each replica's
-    signatures re-hashed with the replica id so replicas block
-    independently (equivalent to R disjoint 100k corpora; replicas
-    colliding into shared blocks would cap out and change semantics).
-    Prep (assemble + replicate) is untimed and identical per arm; the
-    timed section is block-key derivation -> size agg -> prune ->
-    pair self-join -> dedup, exactly the production stage shape."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from cutwed_spark.cache import cache_scope
-    from cutwed_spark.operators.assemble import assemble_with_signatures
-    from cutwed_spark.operators.blocking import (
-        build_candidate_pairs_from_state,
-    )
-    from cutwed_spark.plans.pipeline import PipelineConfig
-    from cutwed_spark.session import get_spark
-
-    cfg = PipelineConfig(num_partitions=2 * n_cores)
-    spark = get_spark(
-        app_name=f"cutwed-blockscale-{n_cores}",
-        master=f"local[{n_cores}]",
-        shuffle_partitions=2 * n_cores,
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    tr = spark.read.parquet(os.path.join(CORPUS_DIR, "transcripts.parquet"))
-    _warm_workers(spark, 2 * n_cores)
-    state = assemble_with_signatures(
-        tr.repartition(2 * n_cores, "conv_id"),
-        cfg.n_buckets,
-        cfg.max_turns,
-        bucket_scale=cfg.bucket_scale,
-        role_scale=cfg.role_scale,
-        num_hashes=cfg.num_hashes,
-        shingle_k=cfg.shingle_k,
-    ).select("conv_id", "n_turns", "tool_sig", "text_hashes", "sig", "wsig")
-    reps = spark.range(BLOCKSCALE_REPS).withColumnRenamed("id", "rep")
-    rep_s = F.col("rep").cast("string")
-    big = (
-        state.crossJoin(reps)
-        .select(
-            F.concat_ws("#", "conv_id", rep_s).alias("conv_id"),
-            "n_turns",
-            # '' is the no-tools sentinel (tool axis filters on it) —
-            # suffixing it would weld every no-tool conv in a replica
-            # into one mega block
-            F.when(
-                F.col("tool_sig") != "",
-                F.concat_ws("#", "tool_sig", rep_s),
-            ).otherwise("").alias("tool_sig"),
-            F.transform(
-                "text_hashes", lambda h: F.xxhash64(h, F.col("rep"))
-            ).alias("text_hashes"),
-            F.transform(
-                "sig", lambda m: F.xxhash64(m, F.col("rep"))
-            ).alias("sig"),
-            F.transform(
-                "wsig", lambda m: F.xxhash64(m, F.col("rep"))
-            ).alias("wsig"),
-        )
-        .repartition(2 * n_cores, "conv_id")
-        .persist()
-    )
-    n_state = big.count()
-
-    def _block(st):
-        with cache_scope():
-            pairs, stats = build_candidate_pairs_from_state(
-                st,
-                num_hashes=cfg.num_hashes,
-                band_size=cfg.band_size,
-                max_block=cfg.max_block,
-            )
-            stats.collect()
-            pairs.write.format("noop").mode("overwrite").save()
-
-    # codegen/JVM warmup on one replica's worth, then timed reps
-    _block(big.where(F.col("conv_id").endswith("#0")))
-    # 2 timed reps on BOTH arms: the first full-size rep pays a
-    # systematic one-time cost (full-size AQE stats/codegen; measured
-    # 36 s -> 13 s rep1->rep2 at 32 cores) that would bias the ratio
-    # if only the big arm got a second rep.
-    walls = []
-    for _ in range(2):
-        t0 = _time.monotonic()
-        _block(big)
-        walls.append(round(_time.monotonic() - t0, 2))
-    with cache_scope():
-        pairs, _st = build_candidate_pairs_from_state(
-            big,
-            num_hashes=cfg.num_hashes,
-            band_size=cfg.band_size,
-            max_block=cfg.max_block,
-        )
-        n_pairs = pairs.count()
-    spark.stop()
-    best = min(walls)
-    return {
-        "cores": n_cores,
-        "n_state_rows": n_state,
-        "n_pairs": n_pairs,
-        "walls": walls,
-        "wall_sec": best,
-        "convs_per_sec": round(n_state / max(best, 1e-9), 1),
-    }
-
-
-def run_cc_scaling(n_cores: int) -> dict:
-    """Cluster-STAGE scaling probe: connected_components over a
-    deterministic planted-component graph big enough that per-iteration
-    real work swamps the per-iteration job-launch floor (the bench-scale
-    cluster stage is ~6 jobs x 5 iterations of latency floor on 59k
-    edges). Graph: CCSCALE_NODES nodes in groups of 64, each node gets 2
-    hash-derived edges within its group — deterministic, so both arms
-    run the IDENTICAL iteration count and edge multiset."""
-    import time as _time
-
-    from pyspark.sql import functions as F
-
-    from cutwed_spark.operators.clustering import connected_components
-    from cutwed_spark.session import get_spark
-
-    spark = get_spark(
-        app_name=f"cutwed-ccscale-{n_cores}",
-        master=f"local[{n_cores}]",
-        shuffle_partitions=2 * n_cores,
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    _warm_workers(spark, 2 * n_cores)
-    group = 64
-    base = spark.range(CCSCALE_NODES).select(
-        F.col("id"), (F.col("id") - F.pmod(F.col("id"), F.lit(group))).alias("g0")
-    )
-    edges = (
-        base.select(
-            "id",
-            "g0",
-            F.explode(F.array(F.lit(1), F.lit(2))).alias("salt"),
-        )
-        .select(
-            F.format_string("c%09d", F.col("id")).alias("conv_id_a"),
-            F.format_string(
-                "c%09d",
-                F.col("g0")
-                + F.pmod(F.xxhash64("id", "salt"), F.lit(group)),
-            ).alias("conv_id_b"),
-        )
-        .repartition(2 * n_cores)
-        .persist()
-    )
-    n_edges = edges.count()
-    # CUTWED_CC_IMPL=fused selects the experimental symmetric-invariant
-    # round (clustering._fused_round) for impl A/Bs on this probe.
-    cc_impl = os.environ.get("CUTWED_CC_IMPL", "star")
-
-    def _cc(e):
-        asg, iters = connected_components(e, impl=cc_impl)
-        asg.write.format("noop").mode("overwrite").save()
-        return iters
-
-    _cc(edges.limit(100_000))  # codegen/JVM warmup
-    # 2 timed reps on BOTH arms (see run_block_scaling: first full-size
-    # rep pays one-time costs that would bias a 2-vs-1 rep ratio)
-    walls, iters = [], 0
-    for _ in range(2):
-        t0 = _time.monotonic()
-        iters = _cc(edges)
-        walls.append(round(_time.monotonic() - t0, 2))
-    spark.stop()
-    best = min(walls)
-    return {
-        "cores": n_cores,
-        "n_edges": n_edges,
-        "n_iterations": iters,
-        "walls": walls,
-        "wall_sec": best,
-        "edges_per_sec": round(n_edges / max(best, 1e-9), 1),
-    }
-
-
 STREAMSCALE_DROPS = int(os.environ.get("CUTWED_STREAMSCALE_DROPS", "16"))
 STREAMSCALE_CONVS = int(os.environ.get("CUTWED_STREAMSCALE_CONVS", "3000"))
 
 
 def run_stream_scaling(n_cores: int) -> dict:
     """Streaming incremental-ER per-batch FLATNESS probe (round 5; not
-    in the default bench flow — a one-off evidence run like
-    blockscale/ccscale).
+    in the default bench flow — a one-off evidence run).
 
     The scale claim under test (ARCHITECTURE.md §8): the foreachBatch
     body costs O(new batch x blocking neighborhood), NOT O(accumulated
@@ -948,22 +757,6 @@ def _worker_main(mode: str) -> None:
     elif mode.startswith("scorescale"):
         cores = int(mode.split(":")[1])
         print("WORKER_JSON " + json.dumps(run_score_scaling(cores)))
-    elif mode.startswith("blockscalem"):
-        cores = int(mode.split(":")[1])
-        out = _run_with_ballast(cores, lambda: run_block_scaling(cores))
-        out["ballast"] = CPUS - cores
-        print("WORKER_JSON " + json.dumps(out))
-    elif mode.startswith("blockscale"):
-        cores = int(mode.split(":")[1])
-        print("WORKER_JSON " + json.dumps(run_block_scaling(cores)))
-    elif mode.startswith("ccscalem"):
-        cores = int(mode.split(":")[1])
-        out = _run_with_ballast(cores, lambda: run_cc_scaling(cores))
-        out["ballast"] = CPUS - cores
-        print("WORKER_JSON " + json.dumps(out))
-    elif mode.startswith("ccscale"):
-        cores = int(mode.split(":")[1])
-        print("WORKER_JSON " + json.dumps(run_cc_scaling(cores)))
     elif mode.startswith("streamscale"):
         cores = int(mode.split(":")[1])
         print("WORKER_JSON " + json.dumps(run_stream_scaling(cores)))

@@ -1,7 +1,6 @@
 """Unit tests for large-star/small-star connected components."""
 
 import pytest
-from pyspark.sql import functions as F
 
 from cutwed_spark.operators.clustering import assign_clusters, connected_components
 
@@ -52,28 +51,14 @@ def test_empty_edges(spark):
     assert got == {"a": "a", "b": "b"}
 
 
-def test_fused_impl_matches_star(spark):
-    """The experimental symmetric-invariant round (a round-5 measured
-    NEGATIVE, kept reachable for the ccscale probe) must stay
-    assignment-identical to the production star pair on a mixed graph
-    of chains, random components, and a clique."""
-    import random
-
-    from cutwed_spark.operators.clustering import connected_components
-
-    random.seed(7)
-    rows = []
-    for c in range(12):
-        ln = 2 + c % 9
-        ids = [f"a{c:03d}_{i:02d}" for i in range(ln)]
-        rows += list(zip(ids, ids[1:]))
-    for c in range(8):
-        ids = [f"b{c:03d}_{i:02d}" for i in range(random.randint(2, 12))]
-        rows += [(i, random.choice(ids)) for i in ids]
-    rows += [(f"q_{i}", f"q_{j}") for i in range(5) for j in range(5)]
-    df = spark.createDataFrame(rows, "conv_id_a string, conv_id_b string")
-    a_star, _ = connected_components(df)
-    a_fused, _ = connected_components(df, impl="fused")
-    m_star = {r["conv_id"]: r["cluster_id"] for r in a_star.collect()}
-    m_fused = {r["conv_id"]: r["cluster_id"] for r in a_fused.collect()}
-    assert m_fused == m_star
+def test_non_convergence_raises(spark):
+    """A 200-node path needs more than two star rounds. Running out of
+    rounds must raise, not return the half-contracted labels (after two
+    rounds they split the one component into 196 clusters)."""
+    edges = [(f"p{i:03d}", f"p{i+1:03d}") for i in range(199)]
+    df = spark.createDataFrame(edges, ["conv_id_a", "conv_id_b"])
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        connected_components(df, max_iter=2)
+    got = _cc(spark, edges)
+    assert len(got) == 200
+    assert set(got.values()) == {"p000"}

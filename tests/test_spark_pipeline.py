@@ -208,29 +208,3 @@ def test_salted_scoring_is_correctness_neutral(spark, corpus):
     assert set(plain) == set(salted)
     for k, v in plain.items():
         assert abs(v - salted[k]) <= 1e-12 * max(1.0, abs(v)), k
-
-
-def test_cogrouped_scoring_matches_join_path(spark, corpus):
-    """score_candidates_cogrouped (dictionary-encoded transfer) computes
-    the same edges as the per-pair-join path."""
-    from cutwed_spark.operators.scoring import score_candidates_cogrouped
-
-    trdf, _, _, _ = corpus
-    cfg = PipelineConfig()
-    series = with_signatures(trdf, assemble_series(trdf, cfg.n_buckets, cfg.max_turns))
-    pairs, _ = build_candidate_pairs_from_state(series)
-    a = {
-        (r["conv_id_a"], r["conv_id_b"]): r["twed"]
-        for r in score_candidates(
-            pairs, series, dim=cfg.dim, nu=cfg.nu, lamb=cfg.lamb
-        ).collect()
-    }
-    b = {
-        (r["conv_id_a"], r["conv_id_b"]): r["twed"]
-        for r in score_candidates_cogrouped(
-            pairs, series, dim=cfg.dim, nu=cfg.nu, lamb=cfg.lamb
-        ).collect()
-    }
-    assert set(a) == set(b)
-    for k in a:
-        assert abs(a[k] - b[k]) <= 1e-9 * max(1.0, abs(a[k])), k
