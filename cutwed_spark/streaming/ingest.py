@@ -36,6 +36,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from cutwed_spark.operators.assemble import assemble_with_signatures
 from cutwed_spark.operators.blocking import (
@@ -127,46 +128,66 @@ def incremental_candidates(
 ) -> tuple[DataFrame, DataFrame]:
     """Candidate pairs touching a NEW conversation, from the persisted
     block-key index — the accumulated state table is never rescanned
-    and its block keys are never re-derived.
+    and its block keys are never re-derived (cuTWED's device-resident
+    reuse principle: don't recompute what hasn't changed).
 
     Returns ``(cand, new_keys)``; the caller appends ``new_keys`` to the
-    index after the batch's writes succeed. Per-batch work is
-    O(new batch) key derivation + one narrow scan of the (conv_id,
-    block_key) index, restricted immediately to blocks a new
-    conversation touches — NOT O(full state) signature re-derivation
-    (the reference's device-resident-reuse principle,
-    /root/reference/src/cuTWED.h:47-53: don't recompute what hasn't
-    changed). Block-size pruning counts DISTINCT conv_ids per touched
-    block, so a replayed batch (crash between the keys append and the
-    stream checkpoint commit) cannot inflate sizes past ``max_block``.
+    index after the batch's writes succeed. The plan is one scan of the
+    (conv_id, block_key) index and one shuffle by block key:
+
+    1. ``touched``: the index rows of blocks a new conversation touches
+       (left-semi join on the batch's own keys) tagged ``is_new=false``,
+       unioned with the batch's keys tagged ``is_new=true``;
+    2. membership bound: per block, only the ``max_block + 1`` smallest
+       DISTINCT conv_ids survive (``dense_rank`` filter, planned as a
+       ``WindowGroupLimit`` on both sides of the shuffle while
+       ``max_block + 1`` is within Spark's
+       ``spark.sql.optimizer.windowGroupLimitThreshold``, 1000 by
+       default), so a huge boilerplate block never becomes one giant
+       array;
+    3. one ``groupBy(block_key)`` collects ``members`` and
+       ``new_members`` as sets; blocks with 2..``max_block`` members
+       are kept;
+    4. ``new_members x members`` explodes to pairs, self-pairs dropped,
+       oriented with least/greatest and deduplicated.
+
+    Block size counts DISTINCT conv_ids (the rank is dense and the
+    members are sets), so a replayed batch (crash between the keys
+    append and the stream checkpoint commit) cannot inflate a block
+    past ``max_block``. Old-x-old pairs are structurally impossible:
+    per-batch cost ~ new x neighborhood.
     """
     new_keys = block_keys_from_state(new_state, cfg.band_size, cfg.num_hashes)
-    all_keys = (
-        spark.read.parquet(p["keys"]).unionByName(new_keys)
-        if os.path.isdir(p["keys"])
-        else new_keys
+    touched = new_keys.withColumn("is_new", F.lit(True))
+    if os.path.isdir(p["keys"]):
+        # Only blocks containing a new conversation can produce a new
+        # pair; everything else in the index is dead weight here.
+        old = spark.read.parquet(p["keys"]).join(
+            new_keys.select("block_key"), "block_key", "left_semi"
+        )
+        touched = old.withColumn("is_new", F.lit(False)).unionByName(touched)
+    member_rank = F.dense_rank().over(
+        Window.partitionBy("block_key").orderBy("conv_id")
     )
-    # Only blocks containing a new conversation can produce a new pair;
-    # everything else in the index is dead weight for this batch.
-    hot = new_keys.select("block_key").dropDuplicates(["block_key"])
-    touched = all_keys.join(hot, "block_key", "left_semi")
-    sized = touched.groupBy("block_key").agg(
-        F.count_distinct("conv_id").alias("block_size")
+    blocks = (
+        touched.withColumn("member_rank", member_rank)
+        .where(F.col("member_rank") <= cfg.max_block + 1)
+        .groupBy("block_key")
+        .agg(
+            F.collect_set("conv_id").alias("members"),
+            F.collect_set(F.when(F.col("is_new"), F.col("conv_id"))).alias(
+                "new_members"
+            ),
+        )
+        .where(F.size("members").between(2, cfg.max_block))
     )
-    pair_keys = sized.where(
-        (F.col("block_size") >= 2) & (F.col("block_size") <= cfg.max_block)
-    ).select("block_key")
-    kept = touched.join(pair_keys, "block_key")
-    # one side restricted to NEW conversations: old-x-old pairs are
-    # structurally impossible, so incremental cost ~ new x neighborhood
-    kept_new = kept.join(new_state.select("conv_id"), "conv_id", "left_semi")
     cand = (
-        kept.alias("l")
-        .join(kept_new.alias("r"), "block_key")
-        .where(F.col("l.conv_id") != F.col("r.conv_id"))
+        blocks.select(F.explode("new_members").alias("a"), "members")
+        .select("a", F.explode("members").alias("b"))
+        .where(F.col("a") != F.col("b"))
         .select(
-            F.least("l.conv_id", "r.conv_id").alias("conv_id_a"),
-            F.greatest("l.conv_id", "r.conv_id").alias("conv_id_b"),
+            F.least("a", "b").alias("conv_id_a"),
+            F.greatest("a", "b").alias("conv_id_b"),
         )
         .dropDuplicates(["conv_id_a", "conv_id_b"])
     )
@@ -185,6 +206,7 @@ def _incremental_batch(
         num_hashes=cfg.num_hashes,
         shingle_k=cfg.shingle_k,
     ).persist()
+    new_keys = None
     try:
         if new_state.isEmpty():
             return
@@ -231,7 +253,7 @@ def _incremental_batch(
         # returns, so a crash replays the whole batch; the replay is
         # idempotent at every cut point (already-scored pairs are
         # anti-joined away, replayed key rows are absorbed by the
-        # distinct-count pruning and pair-level dropDuplicates, and the
+        # distinct-member pruning and pair-level dropDuplicates, and the
         # state append is guarded by a conv_id anti-join below).
         scored.write.mode("append").parquet(p["scored"])
         new_keys.write.mode("append").parquet(p["keys"])
@@ -247,8 +269,10 @@ def _incremental_batch(
                 "left_anti",
             )
         state_rows.write.mode("append").parquet(p["state"])
-        new_keys.unpersist()
     finally:
+        # a failed batch must not leave its caches behind either
+        if new_keys is not None:
+            new_keys.unpersist()
         new_state.unpersist()
 
 

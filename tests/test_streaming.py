@@ -3,6 +3,7 @@ pipeline's answer: same match edges, same clusters, when conversations
 arrive across multiple microbatches."""
 
 import os
+import re
 
 import numpy as np
 import pandas as pd
@@ -102,12 +103,21 @@ def test_incremental_scores_match_batch(spark, split_corpus):
         assert np.isclose(r["twed"], r["twed_s"], rtol=1e-9), r
 
 
+def _assemble(spark, tr, cfg):
+    from cutwed_spark.operators.assemble import assemble_with_signatures
+
+    return assemble_with_signatures(
+        spark.createDataFrame(tr), cfg.n_buckets, cfg.max_turns,
+        bucket_scale=cfg.bucket_scale, role_scale=cfg.role_scale,
+        num_hashes=cfg.num_hashes, shingle_k=cfg.shingle_k,
+    )
+
+
 def test_incremental_candidates_scan_only_index(spark, split_corpus):
     """The per-batch candidate plan must scan only the new batch and the
     narrow block-key index — never the state table, and never re-derive
     old block keys (the O(total state) rescan the round-2 verdict
     flagged as the one genuine scale-killer)."""
-    from cutwed_spark.operators.assemble import assemble_with_signatures
     from cutwed_spark.streaming.ingest import _paths, incremental_candidates
 
     in_dir, work_dir, _, _ = split_corpus
@@ -119,11 +129,7 @@ def test_incremental_candidates_scan_only_index(spark, split_corpus):
         conv_id="newbatch_" + tr_new["conv_id"],
         ts=tr_new["ts"].astype("datetime64[us]"),
     )
-    new_state = assemble_with_signatures(
-        spark.createDataFrame(tr_new), cfg.n_buckets, cfg.max_turns,
-        bucket_scale=cfg.bucket_scale, role_scale=cfg.role_scale,
-        num_hashes=cfg.num_hashes, shingle_k=cfg.shingle_k,
-    )
+    new_state = _assemble(spark, tr_new, cfg)
     cand, new_keys = incremental_candidates(spark, new_state, p, cfg)
     plan = cand._jdf.queryExecution().explainString(
         spark._jvm.org.apache.spark.sql.execution.ExplainMode.fromString(
@@ -134,8 +140,97 @@ def test_incremental_candidates_scan_only_index(spark, split_corpus):
     assert p["state"] + "]" not in plan and p["state"] + "/" not in plan and (
         p["state"] not in plan
     ), "candidate plan rescans the state table"
+    # one scan of the index, at most one join (the left-semi restriction
+    # to the batch's blocks), and a bounded block membership
+    assert plan.count(p["keys"]) == 1, "candidate plan scans the index more than once"
+    joins = set(re.findall(r"^\((\d+)\) \w*Join\b", plan, re.M))
+    assert len(joins) <= 1, f"candidate plan holds {len(joins)} joins"
+    assert "WindowGroupLimit" in plan, "block membership is unbounded"
     # and the candidates still work end-to-end for this batch
     assert cand.count() >= 0
+
+
+def _expected_incremental_pairs(index_rows, new_rows, new_ids, max_block):
+    """Candidate semantics in plain Python over collected rows: pairs
+    inside a block the batch touches, with 2..max_block DISTINCT
+    members, one side new."""
+    touched = {r["block_key"] for r in new_rows}
+    members: dict = {}
+    for r in list(index_rows) + list(new_rows):
+        if r["block_key"] in touched:
+            members.setdefault(r["block_key"], set()).add(r["conv_id"])
+    pairs = set()
+    for m in members.values():
+        if not 2 <= len(m) <= max_block:
+            continue
+        for a in m & new_ids:
+            for b in m - {a}:
+                pairs.add((min(a, b), max(a, b)))
+    return pairs
+
+
+@pytest.mark.parametrize("max_block", [2, 3, 64])
+def test_incremental_candidates_match_python_pairs(spark, split_corpus, max_block):
+    """The candidate set equals the plain-Python definition for a fresh
+    batch, a near-duplicate-of-old batch, and a replayed batch whose
+    keys are already in the index (distinct-member pruning must absorb
+    the duplicated key rows)."""
+    from cutwed_spark.streaming.ingest import _paths, incremental_candidates
+
+    in_dir, work_dir, tr, _ = split_corpus
+    p = _paths(work_dir)
+    if not os.path.isdir(p["keys"]):
+        run_incremental(spark, in_dir, work_dir,
+                        PipelineConfig(threshold=THRESHOLD),
+                        max_files_per_trigger=1)
+    cfg = PipelineConfig(threshold=THRESHOLD, max_block=max_block)
+    index_rows = spark.read.parquet(p["keys"]).collect()
+
+    fresh, _ = synth_corpus(6, seed=7)
+    fresh = fresh.assign(
+        conv_id="fresh_" + fresh["conv_id"],
+        ts=fresh["ts"].astype("datetime64[us]"),
+    )
+    # near duplicates: old conversations under new ids, last turn dropped
+    old_ids = sorted(tr.conv_id.unique())[:8]
+    near = tr[tr.conv_id.isin(old_ids)]
+    last = near.groupby("conv_id")["turn_idx"].transform("max")
+    near = near[(near.turn_idx < last) | (last == 0)]
+    near = near.assign(conv_id="near_" + near["conv_id"])
+    # replay: already-ingested conversations, same ids, same keys
+    replay = tr[tr.conv_id.isin(sorted(tr.conv_id.unique())[-8:])]
+
+    for name, batch in [("fresh", fresh), ("near", near), ("replay", replay)]:
+        new_state = _assemble(spark, batch, cfg)
+        cand, new_keys = incremental_candidates(spark, new_state, p, cfg)
+        got = {(r["conv_id_a"], r["conv_id_b"]) for r in cand.collect()}
+        assert len(got) == cand.count(), f"{name}: duplicate pairs"
+        want = _expected_incremental_pairs(
+            index_rows, new_keys.collect(), set(batch.conv_id), max_block
+        )
+        assert got == want, (name, len(got), len(want))
+        if name != "fresh":
+            assert want, f"{name}: batch shares no block with the index"
+
+
+def test_failed_batch_releases_caches(spark, tmp_path, monkeypatch):
+    """A microbatch that raises mid-way must unpersist everything it
+    persisted, not only on the success path."""
+    from cutwed_spark.streaming import ingest
+
+    def boom(*args, **kwargs):
+        raise RuntimeError("scoring failed")
+
+    tr, _ = synth_corpus(6, seed=11)
+    tr = tr.assign(ts=tr["ts"].astype("datetime64[us]"))
+    spark.catalog.clearCache()
+    monkeypatch.setattr(ingest, "score_candidates", boom)
+    with pytest.raises(RuntimeError, match="scoring failed"):
+        ingest._incremental_batch(
+            spark, spark.createDataFrame(tr), PipelineConfig(),
+            ingest._paths(str(tmp_path / "work")),
+        )
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
 
 
 def test_finalize_routes_through_bucketed_state(spark, split_corpus):
