@@ -106,7 +106,6 @@ def run_pipeline_bench(n_cores: int) -> dict:
     cold first-run cost (best-of runs de-noise the shared host)."""
     import time as _time
 
-    from cutwed_spark.cache import cache_scope
     from cutwed_spark.operators.blocking import build_candidate_pairs_from_state
     from cutwed_spark.operators.clustering import assign_clusters
     from cutwed_spark.operators.scoring import score_candidates
@@ -161,21 +160,19 @@ def run_pipeline_bench(n_cores: int) -> dict:
         score_times.append(round(_time.monotonic() - t1, 3))
     # Steady-state blocking: re-derive candidate pairs from the cached
     # state table (the incremental path's steady shape). Unpersist the
-    # pipeline's pair cache first; cache_scope releases the block-size
-    # persist the operator takes internally.
+    # pipeline's pair cache first so the re-run cannot read it back.
     res.candidate_pairs.unpersist(blocking=True)
     blocking_times = [res.metrics["stages"]["blocking"]]
-    with cache_scope():
-        t1 = _time.monotonic()
-        pairs2, stats2 = build_candidate_pairs_from_state(
-            res.series,
-            num_hashes=cfg.num_hashes,
-            band_size=cfg.band_size,
-            max_block=cfg.max_block,
-        )
-        stats2.collect()
-        pairs2.write.format("noop").mode("overwrite").save()
-        blocking_times.append(round(_time.monotonic() - t1, 3))
+    t1 = _time.monotonic()
+    pairs2, stats2 = build_candidate_pairs_from_state(
+        res.series,
+        num_hashes=cfg.num_hashes,
+        band_size=cfg.band_size,
+        max_block=cfg.max_block,
+    )
+    stats2.collect()
+    pairs2.write.format("noop").mode("overwrite").save()
+    blocking_times.append(round(_time.monotonic() - t1, 3))
     # Steady-state assembly: same treatment for the heaviest stage —
     # unpersist the series (its cached plan fragment would otherwise be
     # substituted for the identical re-built tree) and re-run the

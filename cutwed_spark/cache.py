@@ -2,9 +2,8 @@
 
 Several operators persist an intermediate subtree that feeds multiple
 consumers inside one logical call (the shingle table in the dedup
-operators, the block-size table in blocking, the funnel stages in
-curation) — the Spark analog of the reference's device-resident reuse
-(``twed_malloc_dev``/``twed_free_dev``,
+operators, the funnel stages in curation) — the Spark analog of the
+reference's device-resident reuse (``twed_malloc_dev``/``twed_free_dev``,
 /root/reference/src/cuTWED.h:59-76). Without a release path those
 caches live for the session and accumulate across calls on a long-lived
 100 TB driver.

@@ -1,18 +1,20 @@
 """Blocking: MinHash/LSH over turn-text shingles + exact tool-sequence
-signatures -> deduped candidate pairs.
+and turn-text signatures -> deduped candidate pairs.
 
 The reference computes ALL pairs (the nAA x nBB loop in
 /root/reference/src/cuTWED_core.h:583-620) because batches are small;
 at 10^12-turn scale all-pairs is impossible, so blocking bounds the
-candidate set. The reference's triangular dedup (TRIL enum,
-/root/reference/src/cuTWED.h:24-26) becomes the
-``conv_id_a < conv_id_b`` predicate pushed into the self-join — no
+candidate set. One algorithm enumerates pairs for both the batch
+pipeline and the streaming microbatch (``block_pairs``): a bounded
+``groupBy(block_key)`` collects each block's members and explodes them
+into pairs. The reference's triangular dedup (the TRIL enum of its
+cuTWED.h) becomes the ``a < b`` predicate on the exploded members — no
 triangle is ever materialized.
 
 Everything here is Catalyst built-ins (xxhash64, higher-order functions,
-joins, aggregates): map-side partial aggregation computes the k minhash
-mins per conversation, and oversized LSH buckets (non-discriminative
-"stopword" blocks — the skew hazard, SURVEY.md §7 hard part 4) are
+windows, aggregates): map-side partial aggregation computes the k
+minhash mins per conversation, and oversized blocks (non-discriminative
+"stopword" keys — the skew hazard, SURVEY.md §7 hard part 4) are
 dropped with the drop surfaced as a metric, never silently.
 """
 
@@ -20,8 +22,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from cutwed_spark.cache import scoped_persist
+from pyspark.sql.window import Window
 
 DEFAULT_NUM_HASHES = 32
 DEFAULT_BAND_SIZE = 2
@@ -85,23 +86,6 @@ def shingle_hashes_from_word_hashes(wh, k: int = DEFAULT_SHINGLE_K):
     )
 
 
-def turn_shingle_hashes(
-    transcripts: DataFrame, k: int = DEFAULT_SHINGLE_K
-) -> DataFrame:
-    """-> (conv_id, shb: array<bigint>) — per-TURN shingle hash arrays
-    (family v2: word-hash-mix base, see shingle_hashes_from_word_hashes).
-
-    No explode: the shingle set never becomes rows, so the minhash
-    aggregation shuffles 3 orders of magnitude fewer rows at 10^12-turn
-    scale (turns, not turn x shingle x hash).
-    """
-    return transcripts.select(
-        "conv_id", word_hash_col().alias("wh")
-    ).select(
-        "conv_id", shingle_hashes_from_word_hashes(F.col("wh"), k).alias("shb")
-    )
-
-
 _LONG_MAX = (1 << 63) - 1
 
 
@@ -153,24 +137,6 @@ def signature_from_mins(prefix: str, num_hashes: int):
     ).otherwise(sig)
 
 
-def minhash_from_hashes(
-    turn_hashes: DataFrame, num_hashes: int = DEFAULT_NUM_HASHES
-) -> DataFrame:
-    """(conv_id, shb) per turn -> (conv_id, sig: array<bigint>).
-
-    Per-turn partial mins fold through an ordinary min() aggregate, so
-    Catalyst's map-side partial aggregation applies and the shuffle
-    carries num_hashes bigints per turn-group, never shingle rows.
-    """
-    per_turn = per_turn_member_mins(F.col("shb"), num_hashes)
-    agg = (
-        turn_hashes.select("conv_id", *per_turn)
-        .groupBy("conv_id")
-        .agg(*[F.min(f"m{i}").alias(f"h{i}") for i in range(num_hashes)])
-    )
-    return agg.select("conv_id", signature_from_mins("h", num_hashes).alias("sig"))
-
-
 def lsh_block_keys(
     signatures: DataFrame,
     band_size: int = DEFAULT_BAND_SIZE,
@@ -190,96 +156,6 @@ def lsh_block_keys(
     ]
     return signatures.select(
         "conv_id", F.explode(F.array(*bands)).alias("block_key")
-    )
-
-
-def turn_text_block_keys(transcripts: DataFrame) -> DataFrame:
-    """Exact per-turn text fingerprint blocks (third blocking axis).
-
-    Near-duplicate conversations typically share >= 1 verbatim turn;
-    unrelated conversations essentially never share a full turn text.
-    One block key per distinct (conv_id, turn text). Boilerplate turns
-    (greetings, empty tool outputs) create huge blocks — those are
-    exactly what ``prune_oversized_blocks`` drops.
-    """
-    return (
-        transcripts.where(F.length("text") > 0)
-        .select(
-            "conv_id",
-            F.xxhash64(F.lit("turntext"), F.col("text")).alias("block_key"),
-        )
-        .dropDuplicates(["conv_id", "block_key"])
-    )
-
-
-def tool_sig_block_keys(series: DataFrame) -> DataFrame:
-    """Exact tool-sequence signature blocks (second blocking axis).
-    Only conversations that used >= 1 tool participate."""
-    return series.where(F.col("tool_sig") != "").select(
-        "conv_id", F.xxhash64(F.lit("toolsig"), F.col("tool_sig")).alias("block_key")
-    )
-
-
-def prune_oversized_blocks(
-    blocks: DataFrame, max_block: int = DEFAULT_MAX_BLOCK
-) -> tuple[DataFrame, DataFrame]:
-    """Split blocks into (kept, block_stats).
-
-    A block of size s generates s*(s-1)/2 pairs; blocks above
-    ``max_block`` are almost always non-discriminative boilerplate and
-    are the skew bombs at scale. They are dropped here and REPORTED in
-    block_stats (n_blocks, n_dropped_blocks, max size, pairs estimate).
-    """
-    # One pass: sized is tiny (one row per block key) — persist it so
-    # the stats agg, the keep-keys broadcast, and the candidate join do
-    # NOT each recompute the shingle/minhash subtree. Scoped: released
-    # by an enclosing cache.cache_scope() (the pipeline wraps its run).
-    sized = scoped_persist(
-        blocks.groupBy("block_key").agg(F.count(F.lit(1)).alias("block_size"))
-    )
-    stats = sized.agg(
-        F.count(F.lit(1)).alias("n_blocks"),
-        F.sum(F.when(F.col("block_size") > max_block, 1).otherwise(0)).alias(
-            "n_dropped_blocks"
-        ),
-        F.max("block_size").alias("max_block_size"),
-        F.sum(
-            F.when(
-                F.col("block_size") <= max_block,
-                F.col("block_size") * (F.col("block_size") - 1) / 2,
-            ).otherwise(0)
-        ).cast("long").alias("est_candidate_pairs"),
-    )
-    # Keep only keys that can PRODUCE pairs: 2 <= size <= max_block.
-    # Dropping singleton blocks up front is a large shuffle cut — most
-    # keys are singletons (measured ~80% on the bench corpus: unique
-    # turn-text fingerprints, discriminative LSH bands), and they would
-    # otherwise ride through the pair self-join contributing nothing.
-    # No broadcast hint (the kept-key set is unbounded at corpus
-    # scale); AQE picks the join strategy from runtime sizes.
-    pair_keys = sized.where(
-        (F.col("block_size") >= 2) & (F.col("block_size") <= max_block)
-    ).select("block_key")
-    kept = blocks.join(pair_keys, "block_key")
-    return kept, stats
-
-
-def candidate_pairs(blocks: DataFrame) -> DataFrame:
-    """Self-join block table on block_key -> deduped ordered pairs.
-
-    The ``conv_id_a < conv_id_b`` predicate is the reference's TRIL
-    optimization (/root/reference/src/cuTWED_core.h:598-600) expressed
-    declaratively; Catalyst pushes it into the join. Multi-band hits
-    are collapsed by dropDuplicates (the reference's
-    dropDuplicates-after-union analog, SURVEY.md §2.2 "Distinct").
-    """
-    left = blocks.select(F.col("block_key"), F.col("conv_id").alias("conv_id_a"))
-    right = blocks.select(F.col("block_key"), F.col("conv_id").alias("conv_id_b"))
-    return (
-        left.join(right, "block_key")
-        .where(F.col("conv_id_a") < F.col("conv_id_b"))
-        .select("conv_id_a", "conv_id_b")
-        .dropDuplicates(["conv_id_a", "conv_id_b"])
     )
 
 
@@ -414,6 +290,90 @@ def length_filter_pairs(
     )
 
 
+def block_pairs(
+    keys: DataFrame, max_block: int = DEFAULT_MAX_BLOCK
+) -> tuple[DataFrame, DataFrame]:
+    """(conv_id, block_key, is_new) rows -> (pairs, block_stats).
+
+    The one pair-enumeration algorithm. The batch pipeline tags every
+    key ``is_new``; a streaming microbatch tags its own keys ``is_new``
+    and the index rows of the blocks it touches ``is_new=false``, so
+    old-x-old pairs are never enumerated. The plan is one shuffle by
+    block key:
+
+    1. membership bound: per block, only the ``max_block + 1`` smallest
+       DISTINCT conv_ids survive (a ``dense_rank`` filter, planned as a
+       ``WindowGroupLimit`` on both sides of the shuffle while
+       ``max_block + 1`` is within Spark's
+       ``spark.sql.optimizer.windowGroupLimitThreshold``, 1000 by
+       default), so a huge boilerplate block never becomes one giant
+       array;
+    2. one ``groupBy(block_key)`` collects ``members`` and
+       ``new_members`` as sets;
+    3. blocks with 2..``max_block`` members explode
+       ``new_members x members`` into pairs: ``a < b`` when both are
+       new (the reference's TRIL dedup), any old ``b`` otherwise;
+       pairs are oriented with least/greatest and deduplicated
+       (multi-block hits collapse).
+
+    ``block_stats`` is one row from the same grouped rows: ``n_blocks``
+    (distinct keys), ``n_dropped_blocks`` (blocks over ``max_block``
+    members) and ``est_candidate_pairs`` (s*(s-1)/2 summed over kept
+    blocks, before the cross-block dedup). All three are exact; the
+    true size of a dropped block is never computed. Block size counts
+    DISTINCT conv_ids, so duplicated key rows (a replayed microbatch)
+    cannot push a block past ``max_block``.
+    """
+    member_rank = F.dense_rank().over(
+        Window.partitionBy("block_key").orderBy("conv_id")
+    )
+    blocks = (
+        keys.withColumn("member_rank", member_rank)
+        .where(F.col("member_rank") <= max_block + 1)
+        .groupBy("block_key")
+        .agg(
+            F.collect_set("conv_id").alias("members"),
+            F.collect_set(F.when(F.col("is_new"), F.col("conv_id"))).alias(
+                "new_members"
+            ),
+        )
+    )
+    size = F.size("members")
+    stats = blocks.agg(
+        F.count(F.lit(1)).alias("n_blocks"),
+        F.sum(F.when(size > max_block, 1).otherwise(0)).alias("n_dropped_blocks"),
+        F.sum(F.when(size <= max_block, size * (size - 1) / 2).otherwise(0))
+        .cast("long")
+        .alias("est_candidate_pairs"),
+    )
+    # Partners of a new member a: the new members above it, plus every
+    # old member (array_except also drops a conv_id that is both old and
+    # new, i.e. replayed, so a never pairs with itself).
+    pairs = (
+        blocks.where(size.between(2, max_block))
+        .select(
+            F.explode("new_members").alias("a"),
+            "new_members",
+            F.array_except("members", "new_members").alias("old_members"),
+        )
+        .select(
+            "a",
+            F.explode(
+                F.concat(
+                    F.filter("new_members", lambda b: b > F.col("a")),
+                    "old_members",
+                )
+            ).alias("b"),
+        )
+        .select(
+            F.least("a", "b").alias("conv_id_a"),
+            F.greatest("a", "b").alias("conv_id_b"),
+        )
+        .dropDuplicates(["conv_id_a", "conv_id_b"])
+    )
+    return pairs, stats
+
+
 def build_candidate_pairs_from_state(
     state: DataFrame,
     band_size: int = DEFAULT_BAND_SIZE,
@@ -422,23 +382,13 @@ def build_candidate_pairs_from_state(
     length_ratio_max: float | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """Blocking from the signature-carrying state table
-    -> (pairs, block_stats)."""
-    # Repartition by block_key BEFORE the persist: the size groupBy,
-    # the kept-keys join, and the pair self-join all hash on block_key,
-    # so the cached table's outputPartitioning satisfies every one of
-    # them — three Exchanges of the block table collapse into this one
-    # (Catalyst keeps the cached plan's partitioning). Scoped: the
-    # caller's cache_scope releases it once the pair table is
-    # materialized — a raw persist here outlives the stage and
-    # accumulates across pipeline runs on a long-lived driver.
-    blocks = scoped_persist(
-        block_keys_from_state(state, band_size, num_hashes)
-        .repartition("block_key")
+    -> (pairs, block_stats): every block key is new, so ``block_pairs``
+    enumerates all in-block pairs once; the opt-in length filter
+    follows."""
+    keys = block_keys_from_state(state, band_size, num_hashes).withColumn(
+        "is_new", F.lit(True)
     )
-    kept, stats = prune_oversized_blocks(blocks, max_block)
-    pairs = candidate_pairs(kept)
+    pairs, stats = block_pairs(keys, max_block)
     if length_ratio_max is not None:
         pairs = length_filter_pairs(pairs, state, length_ratio_max)
     return pairs, stats
-
-

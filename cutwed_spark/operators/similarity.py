@@ -242,7 +242,7 @@ def suggest_n_planes(n_rows: int, target_bucket: int = 256) -> int:
 
 def lsh_bucket_stats(buckets: DataFrame, max_bucket: int) -> DataFrame:
     """One-row profile of an LSH bucketing (mirrors
-    blocking.prune_oversized_blocks' cap-and-report contract):
+    blocking.block_pairs' cap-and-report contract):
     (n_buckets, n_dropped_buckets, max_bucket_size, est_candidate_pairs)."""
     sized = buckets.groupBy("bucket").agg(F.count(F.lit(1)).alias("bucket_size"))
     return sized.agg(

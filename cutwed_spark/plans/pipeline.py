@@ -24,9 +24,12 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from cutwed_spark.cache import cache_scope
+from cutwed_spark import __version__
 from cutwed_spark.operators.assemble import assemble_with_signatures, assembly_stats
-from cutwed_spark.operators.blocking import build_candidate_pairs_from_state
+from cutwed_spark.operators.blocking import (
+    SIGNATURE_FAMILY_VERSION,
+    build_candidate_pairs_from_state,
+)
 from cutwed_spark.operators.clustering import assign_clusters
 from cutwed_spark.operators.featurize import feature_dim
 from cutwed_spark.operators.scoring import score_candidates
@@ -154,6 +157,62 @@ def evaluate_pairs(edges: DataFrame, labeled: DataFrame) -> dict:
     return {"tp": tp, "fp": fp, "fn": fn, "precision": prec, "recall": rec, "f1": f1}
 
 
+def check_marker(
+    data_dir: str, marker: str, current: dict, what: str, remedy: str
+) -> None:
+    """Refuse persisted parquet output written under another
+    configuration. ``marker`` is a JSON file recording the ``current``
+    dict the files in ``data_dir`` were written under; raises
+    ValueError when it records anything else, or when ``data_dir``
+    holds parquet files but no marker exists (written before markers
+    were). ``remedy`` ends the message. Pair with :func:`write_marker`
+    before the first append."""
+    if os.path.isfile(marker):
+        with open(marker) as fh:
+            found = json.load(fh)
+        if found != current:
+            changed = ", ".join(
+                f"{k}: {found.get(k)!r} -> {current.get(k)!r}"
+                for k in sorted(found.keys() | current.keys())
+                if found.get(k) != current.get(k)
+            )
+            raise ValueError(
+                f"{what} at {data_dir} was written under another version "
+                f"or configuration ({changed}); {remedy}"
+            )
+    elif os.path.isdir(data_dir) and any(
+        f.endswith(".parquet") for f in os.listdir(data_dir)
+    ):
+        raise ValueError(
+            f"{what} at {data_dir} predates {os.path.basename(marker)}; {remedy}"
+        )
+
+
+def write_marker(marker: str, current: dict) -> None:
+    """Write the :func:`check_marker` record unless one exists."""
+    if not os.path.isfile(marker):
+        with open(marker, "w") as fh:
+            json.dump(current, fh)
+
+
+# PipelineConfig fields that change the scored table; threshold,
+# score_col, salt and num_partitions do not.
+_SCORED_FIELDS = (
+    "n_buckets", "max_turns", "bucket_scale", "role_scale",
+    "num_hashes", "band_size", "shingle_k", "max_block", "length_ratio_max",
+    "nu", "lamb", "degree", "time_scale", "transfer_dtype",
+)
+
+
+def _scores_fingerprint(cfg: PipelineConfig) -> dict:
+    """Everything a score checkpoint's rows depend on: the scoring
+    config fields plus the signature family and engine versions."""
+    fp = {f: getattr(cfg, f) for f in _SCORED_FIELDS}
+    fp["signature_family_version"] = SIGNATURE_FAMILY_VERSION
+    fp["engine_version"] = __version__
+    return fp
+
+
 def _score_checkpoint_path(checkpoint_dir: str) -> str:
     return os.path.join(checkpoint_dir, "scores")
 
@@ -169,6 +228,20 @@ def run_pipeline(
     cfg = cfg or PipelineConfig()
     run_id = run_id or uuid.uuid4().hex[:12]
     metrics: dict = {"run_id": run_id, "stages": {}}
+    ckpt = _score_checkpoint_path(checkpoint_dir) if checkpoint_dir else None
+    if ckpt:
+        # Resume is keyed by the pair only: scores from another config
+        # would be returned as if this run computed them. Refuse up
+        # front, before any stage runs.
+        marker = os.path.join(checkpoint_dir, "scores_config.json")
+        check_marker(
+            ckpt,
+            marker,
+            _scores_fingerprint(cfg),
+            "score checkpoint",
+            "resuming would return scores computed under the old settings; "
+            "use a fresh checkpoint_dir or delete this one",
+        )
 
     def stage(name):
         class _T:
@@ -209,9 +282,7 @@ def run_pipeline(
             for k, v in assembly_stats(series).collect()[0].asDict().items()
         }
 
-    # cache_scope releases the blocking-internal block-size cache once
-    # the persisted pair table is materialized by the count below.
-    with stage("blocking"), cache_scope():
+    with stage("blocking"):
         pairs, block_stats = build_candidate_pairs_from_state(
             series,
             num_hashes=cfg.num_hashes,
@@ -227,7 +298,6 @@ def run_pipeline(
         metrics["n_candidate_pairs"] = pairs.count()
 
     prior = None
-    ckpt = _score_checkpoint_path(checkpoint_dir) if checkpoint_dir else None
     if ckpt and os.path.isdir(ckpt):
         with stage("resume_antijoin"):
             prior = spark.read.parquet(ckpt)
@@ -251,6 +321,9 @@ def run_pipeline(
             transfer_dtype=cfg.transfer_dtype,
         )
         if ckpt:
+            # marker BEFORE the first append, as for the streaming state
+            os.makedirs(checkpoint_dir, exist_ok=True)
+            write_marker(marker, _scores_fingerprint(cfg))
             scored_new.write.mode("append").parquet(ckpt)
             scored = spark.read.parquet(ckpt).dropDuplicates(
                 ["conv_id_a", "conv_id_b"]

@@ -31,21 +31,20 @@ generation anti-joins pairs already scored.
 
 from __future__ import annotations
 
-import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from cutwed_spark.operators.assemble import assemble_with_signatures
 from cutwed_spark.operators.blocking import (
     SIGNATURE_FAMILY_VERSION,
     block_keys_from_state,
+    block_pairs,
 )
 from cutwed_spark.operators.clustering import assign_clusters
 from cutwed_spark.operators.scoring import score_candidates
-from cutwed_spark.plans.pipeline import PipelineConfig
+from cutwed_spark.plans.pipeline import PipelineConfig, check_marker, write_marker
 
 TRANSCRIPT_SCHEMA = (
     "conv_id string, turn_idx int, role string, text string, "
@@ -71,6 +70,12 @@ def _state_version_marker(state_dir: str) -> str:
     return os.path.join(state_dir, "_state_version.json")
 
 
+_STATE_VERSION = {
+    "signature_family_version": SIGNATURE_FAMILY_VERSION,
+    "state_format": STATE_FORMAT_VERSION,
+}
+
+
 def check_state_version(state_dir: str) -> None:
     """Refuse to mix incompatible persisted state.
 
@@ -78,49 +83,18 @@ def check_state_version(state_dir: str) -> None:
     — unioning old-family state rows with new-family batches would
     silently miss every old-vs-new duplicate — and mixed
     float64/float32 ``values_flat`` files make the directory unreadable
-    on append. Raises ValueError on mismatch (rebuild the state dir by
-    re-ingesting); writes the marker for a fresh/unmarked dir.
+    on append. Raises ValueError on mismatch or on parquet state without
+    a marker (rebuild the state dir by re-ingesting).
     """
-    if not os.path.isdir(state_dir):
-        return
-    current = {
-        "signature_family_version": SIGNATURE_FAMILY_VERSION,
-        "state_format": STATE_FORMAT_VERSION,
-    }
-    marker = _state_version_marker(state_dir)
-    has_parquet = any(f.endswith(".parquet") for f in os.listdir(state_dir))
-    if os.path.isfile(marker):
-        with open(marker) as fh:
-            found = json.load(fh)
-        if found != current:
-            raise ValueError(
-                f"incremental state at {state_dir} was written by version "
-                f"{found}, engine is {current}: old-family signatures never "
-                f"band-collide with new ones (silently missed duplicates). "
-                f"Rebuild the state dir by re-ingesting from the source "
-                f"transcripts."
-            )
-    elif has_parquet:
-        raise ValueError(
-            f"incremental state at {state_dir} predates state versioning "
-            f"(no _state_version.json); rebuild it by re-ingesting."
-        )
-    else:
-        with open(marker, "w") as fh:
-            json.dump(current, fh)
-
-
-def _write_state_marker(state_dir: str) -> None:
-    marker = _state_version_marker(state_dir)
-    if not os.path.isfile(marker):
-        with open(marker, "w") as fh:
-            json.dump(
-                {
-                    "signature_family_version": SIGNATURE_FAMILY_VERSION,
-                    "state_format": STATE_FORMAT_VERSION,
-                },
-                fh,
-            )
+    check_marker(
+        state_dir,
+        _state_version_marker(state_dir),
+        _STATE_VERSION,
+        "incremental state",
+        "old-family signatures never band-collide with new ones (silently "
+        "missed duplicates). Rebuild the state dir by re-ingesting from the "
+        "source transcripts.",
+    )
 
 
 def incremental_candidates(
@@ -132,30 +106,17 @@ def incremental_candidates(
     reuse principle: don't recompute what hasn't changed).
 
     Returns ``(cand, new_keys)``; the caller appends ``new_keys`` to the
-    index after the batch's writes succeed. The plan is one scan of the
-    (conv_id, block_key) index and one shuffle by block key:
-
-    1. ``touched``: the index rows of blocks a new conversation touches
-       (left-semi join on the batch's own keys) tagged ``is_new=false``,
-       unioned with the batch's keys tagged ``is_new=true``;
-    2. membership bound: per block, only the ``max_block + 1`` smallest
-       DISTINCT conv_ids survive (``dense_rank`` filter, planned as a
-       ``WindowGroupLimit`` on both sides of the shuffle while
-       ``max_block + 1`` is within Spark's
-       ``spark.sql.optimizer.windowGroupLimitThreshold``, 1000 by
-       default), so a huge boilerplate block never becomes one giant
-       array;
-    3. one ``groupBy(block_key)`` collects ``members`` and
-       ``new_members`` as sets; blocks with 2..``max_block`` members
-       are kept;
-    4. ``new_members x members`` explodes to pairs, self-pairs dropped,
-       oriented with least/greatest and deduplicated.
-
-    Block size counts DISTINCT conv_ids (the rank is dense and the
-    members are sets), so a replayed batch (crash between the keys
-    append and the stream checkpoint commit) cannot inflate a block
-    past ``max_block``. Old-x-old pairs are structurally impossible:
-    per-batch cost ~ new x neighborhood.
+    index after the batch's writes succeed. Only the index restriction
+    lives here: the index rows of blocks a new conversation touches
+    (left-semi join on the batch's own keys) are tagged
+    ``is_new=false`` and unioned with the batch's keys tagged
+    ``is_new=true``; ``blocking.block_pairs`` (the batch pipeline's
+    pair enumeration) turns them into pairs with one scan of the
+    (conv_id, block_key) index and one shuffle by block key. Its
+    distinct-member block sizes absorb a replayed batch's duplicated
+    key rows (crash between the keys append and the stream checkpoint
+    commit). Old-x-old pairs are structurally impossible: per-batch
+    cost ~ new x neighborhood.
     """
     new_keys = block_keys_from_state(new_state, cfg.band_size, cfg.num_hashes)
     touched = new_keys.withColumn("is_new", F.lit(True))
@@ -166,31 +127,7 @@ def incremental_candidates(
             new_keys.select("block_key"), "block_key", "left_semi"
         )
         touched = old.withColumn("is_new", F.lit(False)).unionByName(touched)
-    member_rank = F.dense_rank().over(
-        Window.partitionBy("block_key").orderBy("conv_id")
-    )
-    blocks = (
-        touched.withColumn("member_rank", member_rank)
-        .where(F.col("member_rank") <= cfg.max_block + 1)
-        .groupBy("block_key")
-        .agg(
-            F.collect_set("conv_id").alias("members"),
-            F.collect_set(F.when(F.col("is_new"), F.col("conv_id"))).alias(
-                "new_members"
-            ),
-        )
-        .where(F.size("members").between(2, cfg.max_block))
-    )
-    cand = (
-        blocks.select(F.explode("new_members").alias("a"), "members")
-        .select("a", F.explode("members").alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .select(
-            F.least("a", "b").alias("conv_id_a"),
-            F.greatest("a", "b").alias("conv_id_b"),
-        )
-        .dropDuplicates(["conv_id_a", "conv_id_b"])
-    )
+    cand, _ = block_pairs(touched, cfg.max_block)
     return cand, new_keys
 
 
@@ -215,7 +152,7 @@ def _incremental_batch(
         # must not leave compatible state that the version guard then
         # rejects as pre-versioning.
         os.makedirs(p["state"], exist_ok=True)
-        _write_state_marker(p["state"])
+        write_marker(_state_version_marker(p["state"]), _STATE_VERSION)
         have_state = any(
             f.endswith(".parquet") for f in os.listdir(p["state"])
         )

@@ -8,8 +8,8 @@ from pyspark.sql import functions as F
 
 from cutwed_spark.operators.assemble import assemble_series
 from cutwed_spark.operators.blocking import (
+    block_pairs,
     build_candidate_pairs_from_state,
-    prune_oversized_blocks,
     with_signatures,
 )
 
@@ -53,7 +53,6 @@ def test_oversized_block_dropped_and_reported(spark, boilerplate_corpus):
     st = stats.collect()[0].asDict()
     # the greeting block (300 members) must be among the dropped ones
     assert st["n_dropped_blocks"] >= 1
-    assert st["max_block_size"] >= 300
     # without the cap the greeting turn alone yields 300*299/2 = 44850
     # pairs; capped candidate generation must stay far below that
     n_pairs = pairs.count()
@@ -61,17 +60,19 @@ def test_oversized_block_dropped_and_reported(spark, boilerplate_corpus):
 
 
 def test_cap_keeps_small_blocks_intact(spark):
-    blocks = spark.createDataFrame(
-        [(f"c{i}", 1) for i in range(5)] + [(f"d{i}", 2) for i in range(100)],
-        "conv_id string, block_key bigint",
+    keys = spark.createDataFrame(
+        [(f"c{i}", 1, True) for i in range(5)]
+        + [(f"d{i}", 2, True) for i in range(100)],
+        "conv_id string, block_key bigint, is_new boolean",
     )
-    kept, stats = prune_oversized_blocks(blocks, max_block=10)
+    pairs, stats = block_pairs(keys, max_block=10)
     st = stats.collect()[0].asDict()
     assert st["n_blocks"] == 2
     assert st["n_dropped_blocks"] == 1
     assert st["est_candidate_pairs"] == 10  # 5*4/2 from the small block
-    keys = [r["block_key"] for r in kept.select("block_key").distinct().collect()]
-    assert keys == [1]
+    got = {(r["conv_id_a"], r["conv_id_b"]) for r in pairs.collect()}
+    # all 10 pairs of the small block, none from the 100-member block
+    assert got == {(f"c{i}", f"c{j}") for i in range(5) for j in range(i + 1, 5)}
 
 
 def test_length_filter_pairs(spark):

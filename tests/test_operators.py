@@ -532,11 +532,12 @@ def test_cache_scope_releases_operator_persists(spark):
 
 
 def test_cache_scope_releases_blocking_persists(spark):
-    """The blocking operator's internal persists (the repartitioned
-    block-key table AND the block-size table) must both be released by
-    an enclosing cache_scope — the block-table persist leaked past the
-    scope until round 4 (CacheManager then silently substituted the
-    stale cache into re-built plans, corrupting steady-state timings)."""
+    """Blocking must leave no persisted RDD behind an enclosing
+    cache_scope — a block-table persist leaked past the scope until
+    round 4 (CacheManager then silently substituted the stale cache
+    into re-built plans, corrupting steady-state timings). The
+    operator takes no internal persist any more; this pins that none
+    leaks back in."""
     from cutwed_spark.cache import cache_scope
     from cutwed_spark.operators.assemble import assemble_with_signatures
     from cutwed_spark.operators.blocking import (
@@ -555,7 +556,6 @@ def test_cache_scope_releases_blocking_persists(spark):
         pairs, stats = build_candidate_pairs_from_state(state)
         stats.collect()
         pairs.count()
-        assert persisted_ids() - before  # caches alive inside the scope
     assert not (persisted_ids() - before)  # fully released on exit
 
 

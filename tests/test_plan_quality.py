@@ -53,6 +53,20 @@ def test_one_pass_assembly_single_exchange(spark, small_corpus):
     assert "Join" not in plan, plan
 
 
+def test_batch_blocking_is_one_bounded_aggregation(spark, small_corpus):
+    """Batch candidate pairs come from one bounded groupBy(block_key):
+    the plan caps block membership with a WindowGroupLimit and holds no
+    join (no size table joined back, no pair self-join)."""
+    from cutwed_spark.operators.assemble import assemble_with_signatures
+    from cutwed_spark.operators.blocking import build_candidate_pairs_from_state
+
+    series = assemble_with_signatures(small_corpus.repartition(8, "conv_id"), 8, 64)
+    pairs, _ = build_candidate_pairs_from_state(series, length_ratio_max=None)
+    plan = _plan(pairs, mode="simple")
+    assert "WindowGroupLimit" in plan, plan
+    assert "Join" not in plan, plan
+
+
 def test_scoring_uses_shuffled_hash_join(spark, small_corpus):
     """The series-attachment joins skip SortMergeJoin's payload sort."""
     from cutwed_spark.operators.assemble import assemble_series
@@ -93,13 +107,11 @@ def test_parquet_pushdown_and_pruning(spark, tmp_path):
 
 
 def test_no_forced_broadcast_on_unbounded_sides(spark, small_corpus):
-    """The rare-shingle list (dedup) and the kept-block-key list
-    (blocking) grow with the corpus — no broadcast HINT may be forced on
-    them (AQE may still choose broadcast at runtime when sizes fit)."""
-    from cutwed_spark.operators.blocking import (
-        prune_oversized_blocks,
-        turn_text_block_keys,
-    )
+    """The rare-shingle list (dedup) and the block-key table (blocking)
+    grow with the corpus — no broadcast HINT may be forced on them (AQE
+    may still choose broadcast at runtime when sizes fit)."""
+    from cutwed_spark.operators.assemble import assemble_with_signatures
+    from cutwed_spark.operators.blocking import build_candidate_pairs_from_state
     from cutwed_spark.operators.dedup import ngram_jaccard_pairs
 
     docs = small_corpus.select(
@@ -109,8 +121,9 @@ def test_no_forced_broadcast_on_unbounded_sides(spark, small_corpus):
         ngram_jaccard_pairs(docs)._jdf.queryExecution().analyzed().toString()
     )
     assert "ResolvedHint" not in analyzed, "forced broadcast hint in dedup"
-    kept, _ = prune_oversized_blocks(turn_text_block_keys(small_corpus))
-    analyzed = str(kept._jdf.queryExecution().analyzed().toString())
+    series = assemble_with_signatures(small_corpus, 8, 64)
+    pairs, _ = build_candidate_pairs_from_state(series)
+    analyzed = str(pairs._jdf.queryExecution().analyzed().toString())
     assert "ResolvedHint" not in analyzed, "forced broadcast hint in blocking"
 
 

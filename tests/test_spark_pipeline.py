@@ -172,6 +172,19 @@ def test_checkpoint_resume_idempotent(spark, corpus, tmp_path):
     assert r2.evaluation["f1"] >= 0.99
 
 
+def test_checkpoint_refuses_changed_config(spark, corpus, tmp_path):
+    """Resume is keyed by the pair only: a run under another scoring
+    config must refuse the checkpoint instead of returning the first
+    run's scores as its own."""
+    trdf, labdf, _, _ = corpus
+    ck = str(tmp_path / "ckpt")
+    run_pipeline(spark, trdf, PipelineConfig(nu=0.05), labeled=labdf, checkpoint_dir=ck)
+    with pytest.raises(ValueError, match="nu: 0.05 -> 5.0"):
+        run_pipeline(
+            spark, trdf, PipelineConfig(nu=5.0), labeled=labdf, checkpoint_dir=ck
+        )
+
+
 def test_cluster_recovery(result, corpus):
     """Planted duplicate groups cluster together; distinct base
     conversations never merge."""

@@ -174,7 +174,12 @@ def test_incremental_candidates_match_python_pairs(spark, split_corpus, max_bloc
     """The candidate set equals the plain-Python definition for a fresh
     batch, a near-duplicate-of-old batch, and a replayed batch whose
     keys are already in the index (distinct-member pruning must absorb
-    the duplicated key rows)."""
+    the duplicated key rows). The batch path, where every key is new,
+    must equal the same definition over the whole corpus."""
+    from cutwed_spark.operators.blocking import (
+        block_keys_from_state,
+        build_candidate_pairs_from_state,
+    )
     from cutwed_spark.streaming.ingest import _paths, incremental_candidates
 
     in_dir, work_dir, tr, _ = split_corpus
@@ -211,6 +216,16 @@ def test_incremental_candidates_match_python_pairs(spark, split_corpus, max_bloc
         assert got == want, (name, len(got), len(want))
         if name != "fresh":
             assert want, f"{name}: batch shares no block with the index"
+
+    state = _assemble(spark, tr, cfg)
+    pairs, _ = build_candidate_pairs_from_state(
+        state, cfg.band_size, cfg.num_hashes, max_block
+    )
+    got = {(r["conv_id_a"], r["conv_id_b"]) for r in pairs.collect()}
+    assert len(got) == pairs.count(), "batch: duplicate pairs"
+    all_keys = block_keys_from_state(state, cfg.band_size, cfg.num_hashes).collect()
+    want = _expected_incremental_pairs([], all_keys, set(tr.conv_id), max_block)
+    assert want and got == want, ("batch", len(got), len(want))
 
 
 def test_failed_batch_releases_caches(spark, tmp_path, monkeypatch):
